@@ -48,6 +48,7 @@ from decimal import Decimal, InvalidOperation
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -745,6 +746,13 @@ SMALL_FACTS_FILE_BYTES = 4 << 20
 #: — the MoR trickle shape. Deliberately much tighter than the per-file
 #: SMALL_FACTS gate: collect_set state for blooms is k× the value set.
 BLOOM_FUSE_TOTAL_BYTES = 1 << 20
+#: stats-column types whose skipping facts pyarrow computes on the
+#: driver exactly as Spark's aggregate does (same min/max order, same
+#: null and distinct counts) — the driver-side facts path of small
+#: writes is taken only when every stats column is one of these
+_ARROW_FACT_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "string"})
+#: the key-hash salt column a salted bucket staging partitions on
+_SALT_COL = "_kb_salt"
 
 
 def _apply_dvs(spark, df: DataFrame, files: list[str], dvs: dict, blob=None) -> DataFrame:
@@ -1166,7 +1174,7 @@ def _schema_union(aj: dict | None, bj: dict) -> dict:
 
 def _widened_struct(sj: dict, wid: dict):
     """The recorded schema with the widening map applied, every field
-    nullable — the EXPLICIT read schema for widened tables (mergeSchema
+    nullable — the EXPLICIT read schema of bucketed tables (mergeSchema
     refuses to merge INT32 and INT64 footers, but Spark 4's parquet
     reader performs widening promotions when handed the wide schema
     up front; files missing a drifted column read as null)."""
@@ -1478,14 +1486,17 @@ class TxLogTable:
         """The table AS OF ``version`` (default: latest). The returned
         DataFrame is pinned to the resolved immutable file list —
         snapshot isolation against any later commit. Resolution uses
-        the newest usable checkpoint (falls back to full log replay)."""
-        files = resolve_with_checkpoint(self, version)
+        the newest usable checkpoint (falls back to full log replay).
+        The version is pinned once, so the files, their deletion vectors
+        and the read schema all come from the same snapshot."""
+        target = self.latest_version() if version is None else version
+        files = resolve_with_checkpoint(self, target)
         if not files:
             raise FileNotFoundError(f"no committed data at version {version}")
-        return self._read_snapshot_files(files, version)
+        return self._read_snapshot_files(files, target)
 
     def _read_snapshot_files(self, files: list[str], version: int | None = None) -> DataFrame:
-        """mergeSchema read of snapshot files with the version's DELETION
+        """``_raw_read`` of snapshot files with the version's DELETION
         VECTORS applied — the ONE raw-file read every consumer (reads,
         pruned reads, merge's old-file scan, compact / rebucket /
         migrate rewrites) goes through, so merge-on-read deletes are
@@ -1510,25 +1521,11 @@ class TxLogTable:
         return cdf.unionByName(ddf, allowMissingColumns=True)
 
     def _raw_read(self, files: list[str], version: int | None = None) -> DataFrame:
-        """The one multi-file parquet read every consumer builds on.
-        Unwidened tables read with mergeSchema (additive drift unions
-        by footer merge, today's behavior, no metadata cost). Widened
-        tables read with an EXPLICIT schema — the recorded (monotone)
-        union schema with the widening map applied — because parquet
-        footer merging refuses INT32-vs-INT64 while the Spark 4 reader
-        happily performs the promotion when handed the wide schema up
-        front. Plan-time cost: zero footer reads (cheaper than
-        mergeSchema); files missing a drifted column read as null,
-        exactly like the mergeSchema path."""
-        wid_at = getattr(self, "_widening_at", None)
-        wid = wid_at(version) if wid_at is not None else {}
-        if not wid:
-            return self.spark.read.option("mergeSchema", "true").parquet(*files)
-        target = self.latest_version() if version is None else version
-        sj = _resolve_schema_json(self, target)
-        if sj is None:
-            return self.spark.read.option("mergeSchema", "true").parquet(*files)
-        return self.spark.read.schema(_widened_struct(sj, wid)).parquet(*files)
+        """The one multi-file parquet read every consumer builds on:
+        mergeSchema, so additive drift unions by footer merge (one
+        footer-read job per read). ``BucketedTxLogTable`` reads with the
+        schema its log records instead, once that record is complete."""
+        return self.spark.read.option("mergeSchema", "true").parquet(*files)
 
     def _queryable_snapshot(self, version: int | None = None) -> DataFrame:
         """What SQL should see: the committed snapshot AS OF ``version``
@@ -1867,24 +1864,69 @@ class BucketedTxLogTable(TxLogTable):
     def _stage_bucketed(
         self,
         df: DataFrame,
-        salt_n: int = 1,
-        n_buckets_hint: int | None = None,
         cluster_cols: list | None = None,
         cluster_parts: int | None = None,
     ) -> tuple[list[str], dict[str, int]]:
-        """Stage ``df`` partitioned by key bucket; return (files, {file:
-        bucket}). ``salt_n=1`` keeps each bucket's rows in one task (one
-        contiguous file per bucket dir); ``salt_n>1`` spreads each bucket
-        over ``salt_n`` deterministic key-hash slices so a LARGE touched
-        bucket's rewrite runs as N parallel tasks producing N files — the
-        log format allows many files per bucket, so only write latency
+        """Stage ``df`` partitioned by key bucket, one task per bucket
+        (or range-clustered, see ``_bucket_partitioned``); return
+        (files, {file: bucket})."""
+        return self._write_bucketed(
+            self._bucket_partitioned(
+                df, cluster_cols=cluster_cols, cluster_parts=cluster_parts
+            )
+        )
+
+    def _stage_latest(
+        self,
+        rows: DataFrame,
+        salt_n: int = 1,
+        n_touched: int = 1,
+    ) -> tuple[list[str], dict[str, int], StructType]:
+        """Stage the latest row per key of ``rows`` (delete markers
+        kept) bucket-pure, with ONE exchange: rows are hash-partitioned
+        by key bucket (plus the salt) first, and the latest-row window
+        runs over (bucket, salt, keys). That partitioning already
+        satisfies the window's distribution, so the window's own key
+        shuffle and the staging repartition collapse into one exchange.
+        The result equals windowing over the keys alone because bucket
+        and salt are functions of the keys. Returns (files, {file:
+        bucket}, the written schema)."""
+        from cdc_streaming_pipeline_spark.operators.cdc import latest_state
+        from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
+
+        parted = self._bucket_partitioned(rows, salt_n, n_touched)
+        part = [c for c in (BUCKET_COL, _SALT_COL) if c in parted.columns]
+        state = latest_state(
+            parted,
+            key_cols=part + self.key_cols,
+            order_col=self.order_col,
+            drop_deleted=False,
+        )
+        adds, buckets = self._write_bucketed(state)
+        return adds, buckets, state.drop(*part).schema
+
+    def _bucket_partitioned(
+        self,
+        df: DataFrame,
+        salt_n: int = 1,
+        n_touched: int = 1,
+        cluster_cols: list | None = None,
+        cluster_parts: int | None = None,
+    ) -> DataFrame:
+        """``df`` with its key bucket (``BUCKET_COL``) and partitioned
+        for a bucket-pure write. ``salt_n=1`` keeps each bucket's rows
+        in one task (one contiguous file per bucket dir); ``salt_n>1``
+        spreads each bucket over ``salt_n`` deterministic key-hash
+        slices (the ``_SALT_COL`` column) so a LARGE touched bucket's
+        rewrite runs as N parallel tasks producing N files — the log
+        format allows many files per bucket, so only write latency
         changes. The salt is a hash of the key columns (not a random
-        number), so staging stays deterministic for a given input.
+        number), so staging stays deterministic for a given input;
+        ``n_touched`` (the buckets ``df`` spans) sizes the exchange.
 
         ``cluster_cols`` (with ``cluster_parts`` total output slices)
-        switches to RANGE staging: rows are range-partitioned by
-        (bucket, cluster_cols...) before the per-bucket write, so each
-        bucket's files cover DISJOINT cluster-column ranges — the
+        switches to RANGE partitioning by (bucket, cluster_cols...), so
+        each bucket's files cover DISJOINT cluster-column ranges — the
         layout that makes per-file [min, max] stats selective inside a
         bucket (Delta OPTIMIZE ZORDER's purpose). Pass Column
         expressions (e.g. operators/layout.zorder_value) for
@@ -1895,29 +1937,37 @@ class BucketedTxLogTable(TxLogTable):
         )
         from pyspark.sql import functions as F
 
-        staged = os.path.join(self.data_dir, f"stage-{uuid.uuid4().hex[:12]}")
         out = with_key_bucket(df, self.key_cols, self.n_buckets)
         if cluster_cols:
             exprs = [F.col(c) if isinstance(c, str) else c for c in cluster_cols]
-            parted = out.repartitionByRange(
+            return out.repartitionByRange(
                 max(1, int(cluster_parts or 1)), F.col(BUCKET_COL), *exprs
             )
-        elif salt_n > 1:
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in self.key_cols], F.lit("_wsalt")),
-                F.lit(salt_n),
+        if salt_n > 1:
+            out = out.withColumn(
+                _SALT_COL,
+                F.pmod(
+                    F.xxhash64(*[F.col(c) for c in self.key_cols], F.lit("_wsalt")),
+                    F.lit(salt_n),
+                ),
             )
             # explicit partition count: AQE would otherwise coalesce the
             # salted shuffle back into few tasks, re-serializing exactly
             # the rewrite this exists to parallelize
-            n_parts = salt_n * max(
-                1, out.select(BUCKET_COL).distinct().count() if n_buckets_hint is None else n_buckets_hint
+            return out.repartition(
+                salt_n * max(1, n_touched), F.col(BUCKET_COL), F.col(_SALT_COL)
             )
-            parted = out.repartition(n_parts, F.col(BUCKET_COL), salt)
-        else:
-            parted = out.repartition(F.col(BUCKET_COL))
+        return out.repartition(F.col(BUCKET_COL))
+
+    def _write_bucketed(self, parted: DataFrame) -> tuple[list[str], dict[str, int]]:
+        """Write a ``_bucket_partitioned`` frame as one staged directory
+        per bucket; return (files, {file: bucket})."""
+        from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
+
+        staged = os.path.join(self.data_dir, f"stage-{uuid.uuid4().hex[:12]}")
         (
-            parted.write.mode("errorifexists")
+            parted.drop(_SALT_COL)
+            .write.mode("errorifexists")
             .partitionBy(BUCKET_COL)
             .parquet(staged)
         )
@@ -1968,6 +2018,68 @@ class BucketedTxLogTable(TxLogTable):
         want = -(-old_bytes // (max(1, n_touched) * self.target_file_bytes))
         return int(max(1, min(cap, want)))
 
+    def _schema_fields(self, base: int, written: StructType, grow: bool = False) -> dict:
+        """The schema fields a commit over ``base`` records: the written
+        schema (unioned with the one recorded at ``base`` when ``grow``)
+        and the ``schema_complete`` mark carried over from ``base``. The
+        mark says the record names every live file's columns, which is
+        what lets ``_raw_read`` read with it instead of merging footers.
+        It survives a write exactly when ``base`` had it: rewrites then
+        read their input with that record, so they write a superset of
+        it, and merges union with it, because a merge that touches no
+        old file writes the batch's schema alone."""
+        rec = _resolve_schema_record(self, base) or {}
+        sj = written.jsonValue()
+        if grow:
+            sj = _schema_union(rec.get("schema"), sj)
+        out = {"schema": sj}
+        if rec.get("schema_complete"):
+            out["schema_complete"] = True
+        return out
+
+    def _complete_schema(self, version: int) -> dict | None:
+        """The schema recorded at ``version``, made to name every live
+        file's columns. A record with the ``schema_complete`` mark, or of
+        a widened table (``widen_column`` recorded a verified union, and
+        mixed widths do not footer-merge), already does. Otherwise it is
+        unioned with a footer merge over the live files: logs written
+        before the mark existed may record a schema that misses a drift
+        column other buckets carry (bucket rewrites recorded only what
+        they wrote)."""
+        rec = _resolve_schema_record(self, version) or {}
+        sj = rec.get("schema")
+        if rec.get("schema_complete") or self._widening_at(version):
+            return sj
+        live = resolve_with_checkpoint(self, version)
+        if live:
+            footers = self.spark.read.option("mergeSchema", "true").parquet(*live)
+            sj = _schema_union(sj, footers.schema.jsonValue())
+        return sj
+
+    def _seal_schema(self, base: int) -> int:
+        """Before a merge, once per table: commit ``_complete_schema`` as
+        an alter carrying the ``schema_complete`` mark, so reads switch
+        from footer merging to the recorded schema without dropping a
+        column. Returns the version to merge on — ``base`` when the mark
+        is already there or a concurrent commit took ``base + 1`` (reads
+        of an unmarked log keep merging footers)."""
+        rec = _resolve_schema_record(self, base) or {}
+        if rec.get("schema_complete"):
+            return base
+        sj = self._complete_schema(base)
+        if sj is None:
+            return base
+        entry = {
+            "version": base + 1,
+            "mode": "alter",
+            "adds": [],
+            "removes": [],
+            "n_files": 0,
+            "schema": sj,
+            "schema_complete": True,
+        }
+        return base + 1 if self._try_commit(base + 1, entry) else base
+
     def _bucket_map(self, version: int | None = None) -> dict[str, int]:
         """{data file: bucket} for the SNAPSHOT at ``version``, resolved
         through the newest checkpoint — O(commits-since-checkpoint), not
@@ -1983,12 +2095,8 @@ class BucketedTxLogTable(TxLogTable):
         FIRST micro-batch initializes the table stays exactly-once: the
         replayed batch finds its tag in the resolved txn state and
         no-ops instead of re-applying."""
-        from cdc_streaming_pipeline_spark.operators.cdc import latest_state
-
-        state = latest_state(
-            events, key_cols=self.key_cols, order_col=self.order_col, drop_deleted=False
-        )
-        adds, buckets = self._stage_bucketed(state)
+        adds, buckets, written = self._stage_latest(events)
+        sizes = self._staged_bytes(adds)
         entry = {
             "version": 0,
             "mode": "append",
@@ -1996,12 +2104,14 @@ class BucketedTxLogTable(TxLogTable):
             "removes": [],
             "n_files": len(adds),
             "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
+            "file_bytes": sizes,
             "file_layout_n": {f: self.n_buckets for f in adds},
-            "schema": state.schema.jsonValue(),
+            "schema": written.jsonValue(),
+            # one write holds every file, so its schema is complete
+            "schema_complete": True,
             "table_meta": self._meta_dict(),
         }
-        entry.update(self._staged_skipping_facts(adds, state.columns))
+        entry.update(self._staged_skipping_facts(adds, written, sizes))
         if txn is not None:
             entry["txn"] = [txn[0], txn[1]]
         if not self._try_commit(0, entry):
@@ -2014,7 +2124,12 @@ class BucketedTxLogTable(TxLogTable):
     #: (a categorical column's range spans the alphabet in every file)
     DICT_CAP = 16
 
-    def _staged_skipping_facts(self, adds: list[str], columns: list[str]) -> dict:
+    def _staged_skipping_facts(
+        self,
+        adds: list[str],
+        schema: StructType | None,
+        sizes: dict[str, int] | None = None,
+    ) -> dict:
         """The skipping facts one write stages, as entry keys to merge:
         ``file_stats`` (per-file [min, max]) always, ``file_dicts``
         (per-file value SETS) for (file, column) pairs that are
@@ -2026,6 +2141,13 @@ class BucketedTxLogTable(TxLogTable):
         value-pure. Columns the staged data doesn't carry (schema
         drift) are skipped — consumers read stats-less files
         conservatively.
+
+        ``schema`` is the schema of the frame that wrote ``adds``: the
+        files are read with it, so no schema-inference job runs. None
+        means ``adds`` are live table files (``analyze_table``), read
+        with the recorded schema. ``sizes`` are the staged byte sizes
+        the caller already measured for the log entry; files without
+        one count as large.
 
         Bounded two-phase plan: ONE aggregate job computes min/max,
         null counts, AND an approx-distinct gate per (file, col) — then
@@ -2039,23 +2161,17 @@ class BucketedTxLogTable(TxLogTable):
         cap (sketch error) are dropped exactly; values longer than
         ``DICT_VALUE_CAP`` drop the (file, column) pair to range-only
         pruning."""
-        from pyspark.sql import functions as F
-
         if (not self.stats_cols and not self.bloom_cols) or not adds:
             return {}
+        fresh = schema is not None
+        if not fresh:
+            schema = self._raw_read(adds).schema
+        columns = schema.fieldNames()
         cmap = getattr(self, "column_mapping", {}) or {}
         stats_pol = [cmap.get(c, c) for c in (self.stats_cols or [])]
         bloom_pol = [cmap.get(c, c) for c in (self.bloom_cols or [])]
         present = [c for c in stats_pol if c in columns]
-        # analyze passes LIVE files, which can mix narrow/wide footers
-        # on a widened table — the explicit-schema read handles that;
-        # fresh staged adds are always width-uniform so the plain read
-        # (which sees columns the schema record may not carry yet)
-        # stays the default
-        staged = (
-            self._raw_read(adds) if self.type_widening else self.spark.read.parquet(*adds)
-        )
-        types = {f.name: f.dataType.simpleString() for f in staged.schema.fields}
+        types = {f.name: f.dataType.simpleString() for f in schema.fields}
         # bloom columns must be a type whose probe-side hashing is
         # bit-stable (ints and strings); others silently degrade to
         # whatever range/dict facts stats_cols provide
@@ -2086,20 +2202,110 @@ class BucketedTxLogTable(TxLogTable):
         # stats — one job instead of two, and the approx-distinct gate
         # is replaced by the exact cap check on the collected set. Big
         # files keep the two-phase plan whose gate bounds executor
-        # aggregation state (the r11 fix).
-        sizes = [os.path.getsize(f) for f in adds]
+        # aggregation state (the r11 fix). When the whole fresh write
+        # also fits BLOOM_FUSE_TOTAL_BYTES, carries no bloom column and
+        # every stats column is of a type pyarrow aggregates exactly
+        # like Spark (``_ARROW_FACT_TYPES``), that fused aggregate runs
+        # on the DRIVER over the just-written files instead — the
+        # per-micro-batch shape of the streaming merge sink, where the
+        # Spark aggregate's fixed job cost dwarfs kilobytes of data.
+        if sizes is None:
+            sizes = self._staged_bytes(adds)
+        known = [sizes.get(f) for f in adds]
         fuse_dicts = bool(present) and all(
-            s <= SMALL_FACTS_FILE_BYTES for s in sizes
+            s is not None and s <= SMALL_FACTS_FILE_BYTES for s in known
         )
-        # BLOOM FUSE (MoR MERGE wall parity, SCALE10_r15): when the
-        # whole staged batch is tiny (the trickle-postimage shape), the
-        # k bloom positions per value ride the SAME aggregate as k
-        # bounded collect_sets per column — the separate _bloom_job
-        # re-scan (a whole second Spark job for kilobytes of files)
-        # disappears. Aggregation state is bounded by the batch bytes
-        # themselves (total ≤ 1 MiB) times k ints; big batches keep the
-        # two-job plan whose per-(file,column) gate bounds state.
-        fuse_blooms = bool(bpresent) and sum(sizes) <= BLOOM_FUSE_TOTAL_BYTES
+        small_total = None not in known and sum(known) <= BLOOM_FUSE_TOTAL_BYTES
+        if (
+            fresh
+            and fuse_dicts
+            and small_total
+            and not bpresent
+            and all(types[c] in _ARROW_FACT_TYPES for c in present)
+        ):
+            rows = self._driver_fact_rows(adds, present)
+            fuse_blooms = False
+        else:
+            # BLOOM FUSE (MoR MERGE wall parity, SCALE10_r15): when the
+            # whole staged batch is tiny (the trickle-postimage shape),
+            # the k bloom positions per value ride the SAME aggregate as
+            # k bounded collect_sets per column — the separate
+            # _bloom_job re-scan (a whole second Spark job for kilobytes
+            # of files) disappears. Aggregation state is bounded by the
+            # batch bytes themselves (total ≤ 1 MiB) times k ints; big
+            # batches keep the two-job plan whose per-(file,column) gate
+            # bounds state.
+            fuse_blooms = bool(bpresent) and small_total
+            rows = self._spark_fact_rows(
+                self._read_files(adds, schema),
+                present,
+                bpresent,
+                fuse_dicts,
+                fuse_blooms,
+            )
+        out: dict = {}
+        if present:
+            out["file_stats"] = {
+                norm(r["_f"]): {
+                    c: [
+                        _stat_store(r[f"_min_{c}"], "min"),
+                        _stat_store(r[f"_max_{c}"], "max"),
+                    ]
+                    for c in present
+                }
+                for r in rows
+            }
+            out["file_nulls"] = {
+                norm(r["_f"]): {c: [r["_rows"] - r[f"_nn_{c}"], r["_rows"]] for c in present}
+                for r in rows
+            }
+        blooms: dict = {}
+        if bpresent:
+            blooms = self._staged_blooms(
+                rows, bpresent, types, norm, fused=fuse_blooms, schema=schema
+            )
+        for c in unbloomable:  # typed None marker: analyze converges
+            for r in rows:
+                blooms.setdefault(norm(r["_f"]), {})[c] = None
+        if blooms:
+            out["file_blooms"] = blooms
+        if not present:
+            return out
+        if fuse_dicts:
+            dicts = self._dicts_from_sets(rows, {c: None for c in present}, norm)
+            if dicts:
+                out["file_dicts"] = dicts
+            return out
+        margin = 2 * self.DICT_CAP  # sketch-safe candidate threshold
+        # per-COLUMN candidate file sets (raw URIs — the second job
+        # matches on input_file_name again)
+        cand: dict[str, list[str]] = {
+            c: [r["_f"] for r in rows if r[f"_n_{c}"] <= margin] for c in present
+        }
+        cand = {c: fs for c, fs in cand.items() if fs}
+        if not cand:
+            return out
+        drows = self._dict_job(cand, schema).collect()
+        dicts = self._dicts_from_sets(drows, cand, norm)
+        if dicts:
+            out["file_dicts"] = dicts
+        return out
+
+    def _spark_fact_rows(
+        self,
+        staged: DataFrame,
+        present: list[str],
+        bpresent: list[str],
+        fuse_dicts: bool,
+        fuse_blooms: bool,
+    ) -> list:
+        """The facts aggregate, one row per non-empty staged file
+        (grouped by input_file_name): row count, then per stats column
+        min / max / non-null count / approx distinct count, plus the
+        capped value set when ``fuse_dicts`` and the k bloom position
+        sets per bloom column when ``fuse_blooms``."""
+        from pyspark.sql import functions as F
+
         aggs = [F.count(F.lit(1)).alias("_rows")]
         if fuse_blooms:
             m = self.bloom_bits
@@ -2134,58 +2340,46 @@ class BucketedTxLogTable(TxLogTable):
         for c in bpresent:
             if c not in present:
                 aggs.append(F.approx_count_distinct(c).alias(f"_n_{c}"))
-        rows = (
+        return (
             staged.groupBy(F.input_file_name().alias("_f"))
             .agg(*aggs)
             .collect()  # bounded: one row per staged file
         )
-        out: dict = {}
-        if present:
-            out["file_stats"] = {
-                norm(r["_f"]): {
-                    c: [
-                        _stat_store(r[f"_min_{c}"], "min"),
-                        _stat_store(r[f"_max_{c}"], "max"),
-                    ]
-                    for c in present
-                }
-                for r in rows
-            }
-            out["file_nulls"] = {
-                norm(r["_f"]): {c: [r["_rows"] - r[f"_nn_{c}"], r["_rows"]] for c in present}
-                for r in rows
-            }
-        blooms: dict = {}
-        if bpresent:
-            blooms = self._staged_blooms(
-                rows, bpresent, types, norm, fused=fuse_blooms
-            )
-        for c in unbloomable:  # typed None marker: analyze converges
-            for r in rows:
-                blooms.setdefault(norm(r["_f"]), {})[c] = None
-        if blooms:
-            out["file_blooms"] = blooms
-        if not present:
-            return out
-        if fuse_dicts:
-            dicts = self._dicts_from_sets(rows, {c: None for c in present}, norm)
-            if dicts:
-                out["file_dicts"] = dicts
-            return out
-        margin = 2 * self.DICT_CAP  # sketch-safe candidate threshold
-        # per-COLUMN candidate file sets (raw URIs — the second job
-        # matches on input_file_name again)
-        cand: dict[str, list[str]] = {
-            c: [r["_f"] for r in rows if r[f"_n_{c}"] <= margin] for c in present
-        }
-        cand = {c: fs for c, fs in cand.items() if fs}
-        if not cand:
-            return out
-        drows = self._dict_job(cand).collect()
-        dicts = self._dicts_from_sets(drows, cand, norm)
-        if dicts:
-            out["file_dicts"] = dicts
-        return out
+
+    def _driver_fact_rows(self, adds: list[str], present: list[str]) -> list[dict]:
+        """The fused facts aggregate's rows, computed with pyarrow on
+        the driver over just-written files: per non-empty file the row
+        count and, per stats column, min / max / non-null count and the
+        sorted distinct non-null values capped at DICT_CAP + 1 — the
+        same fields ``_spark_fact_rows`` yields with ``fuse_dicts``, so
+        the entry facts built from them are identical. Callers gate it
+        to small writes and ``_ARROW_FACT_TYPES`` columns (pyarrow and
+        Spark both order strings by UTF-8 bytes, i.e. by code point)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        rows = []
+        for f in adds:
+            tbl = pq.ParquetFile(f).read(columns=present)
+            if tbl.num_rows == 0:
+                continue  # Spark's per-file aggregate has no group for it
+            r = {"_f": f, "_rows": tbl.num_rows}
+            for c in present:
+                col = tbl.column(c)
+                mm = pc.min_max(col).as_py()
+                r[f"_min_{c}"], r[f"_max_{c}"] = mm["min"], mm["max"]
+                r[f"_nn_{c}"] = len(col) - col.null_count
+                vals = pc.unique(col.drop_null()).to_pylist()
+                r[f"_set_{c}"] = sorted(vals)[: self.DICT_CAP + 1]
+            rows.append(r)
+        return rows
+
+    def _read_files(self, files: list[str], schema: StructType | None) -> DataFrame:
+        """Read data files with the schema of the frame that wrote them
+        (no inference job), or with the recorded schema when None."""
+        if schema is None:
+            return self._raw_read(files)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def _dicts_from_sets(self, rows, cand: dict, norm) -> dict:
         """Shared cap/normalize step for both dictionary plans (fused
@@ -2206,16 +2400,18 @@ class BucketedTxLogTable(TxLogTable):
                 dicts[norm(r["_f"])] = d
         return dicts
 
-    def _dict_job(self, cand: dict[str, list[str]]) -> DataFrame:
+    def _dict_job(
+        self, cand: dict[str, list[str]], schema: StructType | None = None
+    ) -> DataFrame:
         """The dictionary collect_set aggregate with the approx-distinct
         gate applied PER (file, column): each column's set is collected
         under ``when(input_file ∈ candidates-for-THAT-column)``, so a
         (file, col) pair that FAILED the gate contributes nulls —
         collect_set drops them — and no task buffers a high-cardinality
         set because one sibling column qualified the file. ``cand``:
-        {column: [raw file URIs that passed the gate for it]}.
-        Exposed as a seam so tests can pin the plan shape (every
-        collect_set wrapped in CASE WHEN)."""
+        {column: [raw file URIs that passed the gate for it]};
+        ``schema`` as in ``_read_files``. Exposed as a seam so tests can
+        pin the plan shape (every collect_set wrapped in CASE WHEN)."""
         from pyspark.sql import functions as F
 
         # decode for the RE-READ (a raw percent-encoded URI double-encodes
@@ -2224,11 +2420,7 @@ class BucketedTxLogTable(TxLogTable):
         cand_files = sorted({_uri_to_path(f) for fs in cand.values() for f in fs})
         fcol = F.input_file_name()
         return (
-            (
-                self._raw_read(cand_files)
-                if self.type_widening
-                else self.spark.read.parquet(*cand_files)
-            )
+            self._read_files(cand_files, schema)
             .groupBy(fcol.alias("_f"))
             .agg(
                 *[
@@ -2241,7 +2433,13 @@ class BucketedTxLogTable(TxLogTable):
         )
 
     def _staged_blooms(
-        self, rows, bpresent: list[str], types: dict, norm, fused: bool = False
+        self,
+        rows,
+        bpresent: list[str],
+        types: dict,
+        norm,
+        fused: bool = False,
+        schema: StructType | None = None,
     ) -> dict:
         """Build per-(file, column) BLOOM FILTER sidecars for one write's
         staged files — the high-cardinality complement of the value
@@ -2267,8 +2465,6 @@ class BucketedTxLogTable(TxLogTable):
         pruning. A candidate file whose column is ALL NULL produces an
         all-zero bitmap (sound: IN never matches null), pruning it for
         every probe even without null facts."""
-        from pyspark.sql import functions as F
-
         gate = self.bloom_bits // 8
         cand = {
             c: [r["_f"] for r in rows if r[f"_n_{c}"] <= gate] for c in bpresent
@@ -2304,7 +2500,7 @@ class BucketedTxLogTable(TxLogTable):
                         ps.update(r[f"_bp_{i}_{c}"] or [])
                     pending.append((norm(r["_f"]), c, sorted(ps)))
         else:
-            brows = self._bloom_job(cand, m, k).collect()
+            brows = self._bloom_job(cand, m, k, schema).collect()
             got = {(norm(r["_f"]), r["_c"]) for r in brows}
             pending = [(norm(r["_f"]), r["_c"], r["_ps"]) for r in brows]
             for c, fs in cand.items():  # all-null candidates: empty bitmap
@@ -2327,7 +2523,13 @@ class BucketedTxLogTable(TxLogTable):
             }
         return out
 
-    def _bloom_job(self, cand: dict[str, list[str]], m: int, k: int) -> DataFrame:
+    def _bloom_job(
+        self,
+        cand: dict[str, list[str]],
+        m: int,
+        k: int,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         """The bloom-position aggregate: per candidate column, hash its
         non-null values k ways (chained xxhash64, JVM-side), explode to
         (file, column, position) and collect the DISTINCT position set
@@ -2349,11 +2551,7 @@ class BucketedTxLogTable(TxLogTable):
             )
             bfiles = sorted({_uri_to_path(f) for f in fs})
             parts.append(
-                (
-                    self._raw_read(bfiles)
-                    if self.type_widening
-                    else self.spark.read.parquet(*bfiles)
-                )
+                self._read_files(bfiles, schema)
                 .where(F.col(c).isNotNull())
                 .select(
                     F.input_file_name().alias("_f"),
@@ -2481,6 +2679,27 @@ class BucketedTxLogTable(TxLogTable):
             return {}
         return dict(meta.get("type_widening") or {})
 
+    def _raw_read(self, files: list[str], version: int | None = None) -> DataFrame:
+        """Read with the schema the log records at ``version``, with the
+        widening map applied, instead of merging parquet footers —
+        whenever that record is marked ``schema_complete`` (it names
+        every live file's columns) or the table is widened. Planning the
+        read then launches no Spark job, and widened tables read at all
+        (footer merging refuses INT32-vs-INT64; the Spark 4 reader
+        performs the promotion when handed the wide schema up front).
+        Files missing a drifted column read it as null, exactly like a
+        footer merge. Unmarked records (logs written before the mark, or
+        by a writer that does not set it) keep the mergeSchema read,
+        because they may miss a column some bucket carries."""
+        target = self.latest_version() if version is None else version
+        rec = _resolve_schema_record(self, target) if target is not None else None
+        wid = self._widening_at(target) if rec is not None else {}
+        if rec is None or not (rec.get("schema_complete") or wid):
+            return super()._raw_read(files, version)
+        return self.spark.read.schema(
+            _widened_struct(rec["schema"], wid)
+        ).parquet(*files)
+
     def widen_column(self, name: str, new_type: str) -> int:
         """Widen a column's type as ONE metadata commit — no file
         rewrite (Delta type widening / Iceberg schema evolution).
@@ -2528,25 +2747,13 @@ class BucketedTxLogTable(TxLogTable):
                     "precision growth are metadata-safe"
                 )
             self.type_widening[phys] = new_type
-            # record a VERIFIED union schema with the alter: post-widen
-            # reads use an explicit schema (mergeSchema refuses mixed
-            # widths), which silently drops any live-file column the
-            # record misses — a possibility on pre-monotone logs. One
-            # footer-merge over the live files closes it (the files are
-            # all readable together exactly because nothing is widened
-            # mid-flight on THEM); if a prior widen already mixed
-            # widths, the record has been a verified union since then.
-            live = resolve_with_checkpoint(self, self.latest_version())
-            try:
-                sj = self.spark.read.option("mergeSchema", "true").parquet(*live).schema.jsonValue() if live else None
-            except Exception:
-                sj = None  # widths already mixed: record is already a union
-            base_sj = _resolve_schema_json(self, self.latest_version())
-            if sj is not None:
-                merged = _schema_union(base_sj, sj)
-            else:
-                merged = base_sj
-            return {"schema": merged} if merged is not None else None
+            # record a complete schema with the alter: post-widen reads
+            # use an explicit schema (mergeSchema refuses mixed widths),
+            # which silently drops any live-file column the record misses
+            merged = self._complete_schema(self.latest_version())
+            if merged is None:
+                return None
+            return {"schema": merged, "schema_complete": True}
 
         return self._commit_alter(mutate)
 
@@ -2721,17 +2928,18 @@ class BucketedTxLogTable(TxLogTable):
             if self.checkpoint_interval and version % self.checkpoint_interval == 0:
                 write_checkpoint(self, version)
             return version
-        snap = resolve_with_checkpoint(self, base)
-        df = self._read_snapshot_files(snap, base)
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
+        snap = resolve_with_checkpoint(self, base)
+        written = self._read_snapshot_files(snap, base).drop(BUCKET_COL)
         old_n = self.n_buckets
         self.n_buckets = new_n_buckets  # _stage_bucketed hashes with this
         try:
-            adds, buckets = self._stage_bucketed(df.drop(BUCKET_COL), salt_n=1)
+            adds, buckets = self._stage_bucketed(written)
         except BaseException:
             self.n_buckets = old_n
             raise
+        sizes = self._staged_bytes(adds)
         version = base + 1
         entry = {
             "version": version,
@@ -2740,13 +2948,13 @@ class BucketedTxLogTable(TxLogTable):
             "removes": sorted(snap),
             "n_files": len(adds),
             "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
+            "file_bytes": sizes,
             "file_layout_n": {f: self.n_buckets for f in adds},
             "buckets": sorted(set(buckets.values())),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            **self._schema_fields(base, written.schema),
             "table_meta": self._meta_dict(),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
+        entry.update(self._staged_skipping_facts(adds, written.schema, sizes))
         if not self._try_commit(version, entry):
             self.n_buckets = old_n
             raise ConcurrentWriteError(f"rebucket lost the race at {version}")
@@ -2811,10 +3019,11 @@ class BucketedTxLogTable(TxLogTable):
             self.n_buckets = n_buckets
         self.type_widening[phys] = new_type  # future batches hash WIDE
         try:
-            adds, buckets = self._stage_bucketed(df, salt_n=1)
+            adds, buckets = self._stage_bucketed(df)
         except BaseException:
             self.n_buckets, self.type_widening = old_n, old_wid
             raise
+        sizes = self._staged_bytes(adds)
         version = base + 1
         entry = {
             "version": version,
@@ -2823,13 +3032,13 @@ class BucketedTxLogTable(TxLogTable):
             "removes": sorted(snap),
             "n_files": len(adds),
             "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
+            "file_bytes": sizes,
             "file_layout_n": {f: self.n_buckets for f in adds},
             "buckets": sorted(set(buckets.values())),
-            "schema": df.schema.jsonValue(),
+            **self._schema_fields(base, df.schema),
             "table_meta": self._meta_dict(),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
+        entry.update(self._staged_skipping_facts(adds, df.schema, sizes))
         if not self._try_commit(version, entry):
             self.n_buckets, self.type_widening = old_n, old_wid
             raise ConcurrentWriteError(f"widen_key lost the race at {version}")
@@ -2861,8 +3070,9 @@ class BucketedTxLogTable(TxLogTable):
             return None, 0
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
-        df = self._read_snapshot_files(stale, base)
-        adds, buckets = self._stage_bucketed(df.drop(BUCKET_COL), salt_n=1)
+        written = self._read_snapshot_files(stale, base).drop(BUCKET_COL)
+        adds, buckets = self._stage_bucketed(written)
+        sizes = self._staged_bytes(adds)
         version = base + 1
         entry = {
             "version": version,
@@ -2871,12 +3081,12 @@ class BucketedTxLogTable(TxLogTable):
             "removes": sorted(stale),
             "n_files": len(adds),
             "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
+            "file_bytes": sizes,
             "file_layout_n": {f: self.n_buckets for f in adds},
             "buckets": sorted(set(buckets.values())),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            **self._schema_fields(base, written.schema),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
+        entry.update(self._staged_skipping_facts(adds, written.schema, sizes))
         if not self._try_commit(version, entry):
             raise ConcurrentWriteError(f"bucket migration lost the race at {version}")
         if self.checkpoint_interval and version % self.checkpoint_interval == 0:
@@ -2906,12 +3116,12 @@ class BucketedTxLogTable(TxLogTable):
         micro-batch replayed after a streaming restart lands zero
         duplicate rows. Epochs must be monotonic per writer (Structured
         Streaming's batchId contract)."""
-        from cdc_streaming_pipeline_spark.operators.cdc import latest_state
         from cdc_streaming_pipeline_spark.operators.merge import touched_buckets
 
         base = self.latest_version()
         if base is None:
             raise FileNotFoundError("merge into an uninitialized table; call init_from_events")
+        base = self._seal_schema(base)
         self._refresh_meta(base)  # adopt an out-of-band rebucket's layout
         batch = self._to_physical(batch)
         snap, bmap, txns = resolve_snapshot_state(self, base)
@@ -2964,17 +3174,15 @@ class BucketedTxLogTable(TxLogTable):
             if prev is None
             else prev.unionByName(batch, allowMissingColumns=True)
         )
-        new_state = latest_state(
-            merged, key_cols=self.key_cols, order_col=self.order_col, drop_deleted=False
-        )
-        adds, buckets = self._stage_bucketed(
-            new_state,
+        adds, buckets, written = self._stage_latest(
+            merged,
             salt_n=self._merge_salt_n(
                 old, len(touched), resolve_file_bytes(self, base)
             ),
-            n_buckets_hint=len(touched),
+            n_touched=len(touched),
         )
-        staged_facts = self._staged_skipping_facts(adds, new_state.columns)
+        sizes = self._staged_bytes(adds)
+        staged_facts = self._staged_skipping_facts(adds, written, sizes)
         for _ in range(max_retries):
             version = base + 1
             entry = {
@@ -2984,19 +3192,13 @@ class BucketedTxLogTable(TxLogTable):
                 "removes": sorted(old),
                 "n_files": len(adds),
                 "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
+                "file_bytes": sizes,
                 "file_layout_n": {f: self.n_buckets for f in adds},
                 "buckets": sorted(touched),
-                # the MERGED schema, unioned with the previously
-                # recorded one so the record stays MONOTONE: a merge
-                # touching only drift-less buckets must not shrink the
-                # recorded schema below a column other buckets carry —
-                # the invariant the widened-table explicit-schema read
-                # (and _empty_frame generally) relies on
-                "schema": _schema_union(
-                    _resolve_schema_json(self, base),
-                    new_state.schema.jsonValue(),
-                ),
+                # unioned with the schema recorded at the (possibly
+                # re-resolved) base: the record stays MONOTONE, which
+                # the recorded-schema read and _empty_frame rely on
+                **self._schema_fields(base, written, grow=True),
             }
             entry.update(staged_facts)
             if txn is not None:
@@ -3101,7 +3303,6 @@ class BucketedTxLogTable(TxLogTable):
 
         Returns (version, touched buckets); replayed ``txn`` batches
         no-op exactly like the rewrite path."""
-        from cdc_streaming_pipeline_spark.operators.cdc import latest_state
         from cdc_streaming_pipeline_spark.operators.merge import (
             BUCKET_COL,
             touched_buckets,
@@ -3114,6 +3315,7 @@ class BucketedTxLogTable(TxLogTable):
             raise FileNotFoundError(
                 "merge into an uninitialized table; call init_from_events"
             )
+        base = self._seal_schema(base)
         self._refresh_meta(base)
         batch = self._to_physical(batch)
         snap, bmap, txns = resolve_snapshot_state(self, base)
@@ -3245,16 +3447,9 @@ class BucketedTxLogTable(TxLogTable):
                 if prev_rows is None
                 else prev_rows.unionByName(batch, allowMissingColumns=True)
             )
-            new_state = latest_state(
-                merged,
-                key_cols=self.key_cols,
-                order_col=self.order_col,
-                drop_deleted=False,
-            )
-            adds, buckets = self._stage_bucketed(
-                new_state, n_buckets_hint=len(touched)
-            )
-            staged_facts = self._staged_skipping_facts(adds, new_state.columns)
+            adds, buckets, written = self._stage_latest(merged)
+            sizes = self._staged_bytes(adds)
+            staged_facts = self._staged_skipping_facts(adds, written, sizes)
             if oldk is not None:
                 # oldk is cached and sized by the batch's keys, so the
                 # threshold gate's capped collect is cheap; a trickle
@@ -3287,15 +3482,12 @@ class BucketedTxLogTable(TxLogTable):
                 "removes": [],
                 "n_files": len(adds),
                 "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
+                "file_bytes": sizes,
                 "file_layout_n": {f: self.n_buckets for f in adds},
                 "file_dvs": file_dvs,
                 "dv_added": dv_added,
                 "buckets": sorted(touched),
-                "schema": _schema_union(
-                    _resolve_schema_json(self, base),
-                    new_state.schema.jsonValue(),
-                ),
+                **self._schema_fields(base, written, grow=True),
             }
             entry.update(staged_facts)
             if txn is not None:
@@ -3395,22 +3587,23 @@ class BucketedTxLogTable(TxLogTable):
         if not targets:
             return None, []
         old = sorted({f for b in targets for f in per_bucket[b]})
-        df = self._read_snapshot_files(old, base)
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
+        written = self._read_snapshot_files(old, base).drop(BUCKET_COL)
+
         if cluster_cols and cluster_parts is None:
-            sizes = resolve_file_bytes(self, base)
-            known = [sizes[f] for f in old if f in sizes]
+            logged = resolve_file_bytes(self, base)
+            known = [logged[f] for f in old if f in logged]
             total = sum(known) if known else 0
             cluster_parts = max(
                 len(targets), -(-total // self.target_file_bytes) if total else 1
             )
         adds, new_buckets = self._stage_bucketed(
-            df.drop(BUCKET_COL),
-            salt_n=1,
+            written,
             cluster_cols=cluster_cols,
             cluster_parts=cluster_parts,
         )
+        sizes = self._staged_bytes(adds)
         version = base + 1
         entry = {
             "version": version,
@@ -3419,14 +3612,14 @@ class BucketedTxLogTable(TxLogTable):
             "removes": sorted(old),
             "n_files": len(adds),
             "file_buckets": new_buckets,
-            "file_bytes": self._staged_bytes(adds),
+            "file_bytes": sizes,
             "file_layout_n": {f: self.n_buckets for f in adds},
             # an old-layout input file can carry rows of buckets beyond
             # the targets; record every bucket this commit rewrote
             "buckets": sorted(set(new_buckets.values()) | set(targets)),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            **self._schema_fields(base, written.schema),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
+        entry.update(self._staged_skipping_facts(adds, written.schema, sizes))
         if not self._try_commit(version, entry):
             raise ConcurrentWriteError(
                 f"bucket compaction of {targets} lost the race at {version}"
@@ -3882,7 +4075,8 @@ class BucketedTxLogTable(TxLogTable):
                 post = post.drop("_is_deleted")
             post_phys = self._to_physical(post)
             adds, buckets = self._stage_bucketed(post_phys)
-            staged_facts = self._staged_skipping_facts(adds, post_phys.columns)
+            sizes = self._staged_bytes(adds)
+            staged_facts = self._staged_skipping_facts(adds, post_phys.schema, sizes)
         finally:
             matched.unpersist()
 
@@ -3895,7 +4089,7 @@ class BucketedTxLogTable(TxLogTable):
                 "removes": [],
                 "n_files": len(adds),
                 "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
+                "file_bytes": sizes,
                 "file_layout_n": {f: self.n_buckets for f in adds},
                 "file_dvs": file_dvs,
                 "dv_added": dv_added,
@@ -4452,12 +4646,15 @@ def write_checkpoint(table: TxLogTable, version: int | None = None) -> int:
             f: d for f, d in resolve_file_dvs(table, v).items() if f in live
         },
     }
-    # carry the newest recorded schema forward so _empty_frame and the
+    # carry the newest recorded schema (and its complete mark, which
+    # _raw_read keys on) forward so _empty_frame and the
     # next checkpoint's own schema resolution never probe past a
     # checkpoint (bounded like every other metadata path)
-    sj = _resolve_schema_json(table, v)
-    if sj is not None:
-        ck["schema"] = sj
+    rec = _resolve_schema_record(table, v)
+    if rec is not None:
+        ck["schema"] = rec["schema"]
+        if rec.get("schema_complete"):
+            ck["schema_complete"] = True
     tm = resolve_table_meta(table, v)
     if tm is not None:
         ck["table_meta"] = tm
@@ -4736,13 +4933,14 @@ def resolve_with_checkpoint(table: TxLogTable, version: int | None = None) -> li
     return files
 
 
-def _resolve_schema_json(table: TxLogTable, target: int) -> dict | None:
-    """Newest recorded schema at or below ``target``: probe log entries
-    DOWNWARD from target to the newest usable checkpoint, then the
-    checkpoint's own ``schema`` (recorded when it was written, resolved
-    the same way) — O(commits-since-checkpoint). Legacy checkpoints
-    without a schema fall through to probing the rest of the log
-    (self-heals at the next checkpoint write)."""
+def _resolve_schema_record(table: TxLogTable, target: int) -> dict | None:
+    """Newest log entry (or checkpoint) at or below ``target`` that
+    records a schema — its ``schema`` and ``schema_complete`` mark
+    travel together: probe log entries DOWNWARD from target to the
+    newest usable checkpoint, then the checkpoint itself (which carries
+    both forward when it is written) — O(commits-since-checkpoint).
+    Legacy checkpoints without a schema fall through to probing the
+    rest of the log (self-heals at the next checkpoint write)."""
     best = _best_checkpoint(table, target)
     floor = best["version"] if best is not None else -1
     for v in range(target, floor, -1):
@@ -4750,17 +4948,23 @@ def _resolve_schema_json(table: TxLogTable, target: int) -> dict | None:
             continue
         e = table._read_entry(v)
         if "schema" in e:
-            return e["schema"]
+            return e
     if best is not None:
         if "schema" in best:
-            return best["schema"]
+            return best
         for v in range(floor, -1, -1):  # legacy checkpoint: keep probing
             if not table.blob.exists(table._entry_path(v)):
                 continue
             e = table._read_entry(v)
             if "schema" in e:
-                return e["schema"]
+                return e
     return None
+
+
+def _resolve_schema_json(table: TxLogTable, target: int) -> dict | None:
+    """Newest recorded schema at or below ``target``."""
+    rec = _resolve_schema_record(table, target)
+    return None if rec is None else rec["schema"]
 
 
 def resolve_table_meta(table: TxLogTable, version: int | None = None) -> dict | None:
@@ -4905,9 +5109,11 @@ def clone_table(src: TxLogTable, dest_path: str, version: int | None = None,
         },
         "cloned_from": {"path": src.path, "version": v},
     }
-    sj = _resolve_schema_json(src, v)
-    if sj is not None:
-        entry["schema"] = sj
+    rec = _resolve_schema_record(src, v)
+    if rec is not None:
+        entry["schema"] = rec["schema"]
+        if rec.get("schema_complete"):  # the clone shares the live files
+            entry["schema_complete"] = True
     meta = resolve_table_meta(src, v)
     if meta is not None:
         entry["table_meta"] = meta
@@ -4987,15 +5193,15 @@ def analyze_table(
         missing = missing[:max_files]
     if not missing:
         return None
-    columns = table.spark.read.option("mergeSchema", "true").parquet(*missing).columns
     if hasattr(table, "_staged_skipping_facts"):
         old_policy = table.stats_cols
         table.stats_cols = cols
         try:
-            facts = table._staged_skipping_facts(missing, columns)
+            facts = table._staged_skipping_facts(missing, None)
         finally:
             table.stats_cols = old_policy
     else:
+        columns = table._raw_read(missing).columns
         facts = table._file_stats(missing, [c for c in cols if c in columns])
     if not facts:
         return None

@@ -476,7 +476,15 @@ def bucketed_merge_stream_sink(
       batch (``init_from_events`` carries the same tag),
     - keeps merge metadata cost O(commits-since-checkpoint): the sink
       inherits the table's auto-checkpoint policy, which matters
-      precisely here, where commits arrive at stream cadence forever.
+      precisely here, where commits arrive at stream cadence forever,
+    - pays a FIXED job cost that small batches are bound by, so it is
+      kept to 4 Spark jobs per steady batch: the touched-bucket probe
+      (2) and one exchange plus the write (2) — the latest-row window
+      shares the staging exchange, the touched buckets are read with
+      the schema the log records (no footer-merge job), and a small
+      write's skipping facts are computed on the driver from the files
+      it just wrote (no aggregate jobs; large writes, bloom columns and
+      stats columns other than integral/string keep the Spark plans).
 
     ``stream_df`` must be CDC-shaped (key_cols + ``_op``/``order_col``/
     ``_deleted``). Readers query ``BucketedTxLogTable.read_state()`` —

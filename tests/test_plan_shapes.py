@@ -631,3 +631,45 @@ def test_mi_and_wasserstein_single_fact_scan_no_funnel(spark):
     plan = _plan(split_drift_wasserstein(spark, SF_DIR))
     assert "EvalPython" not in plan
     assert plan.count("SinglePartition") == 1
+
+
+def test_bucketed_merge_stages_with_one_exchange(spark, tmp_path, monkeypatch):
+    """The merge's latest-row window and its bucket staging share ONE
+    hash exchange: partitioning by key bucket (plus the salt, when a
+    large bucket's rewrite is spread over several tasks) already
+    satisfies the window's (bucket, salt, keys) distribution, so each
+    micro-batch shuffles its rows once, not twice."""
+    from pyspark.sql import functions as F
+
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
+
+    plans: list[str] = []
+    real = BucketedTxLogTable._write_bucketed
+
+    def spy(self, parted):
+        plans.append(_plan(parted, "simple"))
+        return real(self, parted)
+
+    monkeypatch.setattr(BucketedTxLogTable, "_write_bucketed", spy)
+
+    def events(ids, lsn):
+        return ids.select(
+            F.col("id"),
+            F.lit("v").alias("val"),
+            F.lit("u").alias("_op"),
+            F.lit(lsn).alias("_lsn"),
+            F.lit(None).cast("string").alias("_deleted"),
+        )
+
+    # target_file_bytes=1 makes the second merge salt its touched bucket
+    t = BucketedTxLogTable(
+        spark, str(tmp_path / "t"), key_cols=["id"], n_buckets=4
+    )
+    t.init_from_events(events(spark.range(40), "0001"))
+    t.merge_cdc_batch(events(spark.range(3), "0002"))
+    t.target_file_bytes = 1
+    t.merge_cdc_batch(events(spark.range(1), "0003"))
+    assert len(plans) == 3
+    assert "_kb_salt" in plans[2]
+    for plan in plans:
+        assert sum("Exchange" in line for line in plan.splitlines()) == 1, plan

@@ -975,3 +975,66 @@ def test_psi_monitor_clamps_negative_values_into_bin_zero(spark, tmp_path):
     # all-negative wave = all mass in bin 0 vs uniform reference: large,
     # FINITE psi, strictly above the in-distribution wave
     assert got[1][1] > got[0][1] and got[1][1] > 1.0
+
+
+def _group_jobs(spark, group: str) -> list[int]:
+    """Spark jobs tagged with ``group``, once the listener bus has
+    delivered every event the status store counts them from."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stream_merge_sink_steady_batch_job_budget(spark, tmp_path):
+    """A steady micro-batch of the bucketed merge sink launches at most 4
+    Spark jobs: the touched-bucket probe (2), then the one staging
+    exchange and the write (2). Reading the touched buckets with the
+    recorded schema and computing the small write's skipping facts on
+    the driver launch none — and neither does building read_state()."""
+    import json as _json
+
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
+    from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        bucketed_merge_stream_sink,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table_path = str(tmp_path / "table")
+    schema = "id bigint, amount double, _op string, _lsn string, _deleted string"
+    names = ("id", "amount", "_op", "_lsn", "_deleted")
+
+    def run_batch(name, rows):
+        with open(src / name, "w") as f:
+            for r in rows:
+                f.write(_json.dumps(dict(zip(names, r))) + "\n")
+        q = (
+            bucketed_merge_stream_sink(
+                spark.readStream.schema(schema).json(str(src)),
+                table_path,
+                str(tmp_path / "ckpt"),
+                key_cols=["id"],
+                n_buckets=4,
+                stats_cols=["id"],
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
+        assert q.exception() is None
+        return _group_jobs(spark, str(q.runId))
+
+    run_batch("w000.json", [(i, float(i), "r", "0001", None) for i in range(40)])
+    # each start runs under a fresh runId: its job group is this batch alone
+    jobs = run_batch("w001.json", [(i, -1.0, "u", "0002", None) for i in range(5)])
+    assert 0 < len(jobs) <= 4, jobs
+
+    t = BucketedTxLogTable(spark, table_path)
+    spark.sparkContext.setJobGroup("read-state-build", "build read_state")
+    try:
+        df = t.read_state()
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert _group_jobs(spark, "read-state-build") == []
+    got = {r["id"]: r["amount"] for r in df.collect()}
+    assert got == {i: (-1.0 if i < 5 else float(i)) for i in range(40)}

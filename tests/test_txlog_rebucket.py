@@ -367,3 +367,83 @@ def test_lazy_rebucket_ignores_dead_files_layouts(spark, tmp_path):
     t.merge_cdc_batch(_events(spark, [(5, "HOT", "u", "0002", None)]))
     got = _state(t)
     assert got[5] == "HOT" and len(got) == 60
+
+
+def _recorded(t, v=None):
+    """(recorded column names, complete mark) of the log at ``v``."""
+    from cdc_streaming_pipeline_spark.sources.txlog import _resolve_schema_record
+
+    rec = _resolve_schema_record(t, t.latest_version() if v is None else v)
+    return {f["name"] for f in rec["schema"]["fields"]}, rec.get("schema_complete")
+
+
+def _drift(spark, rows):
+    return spark.createDataFrame(rows, SCHEMA + ", note string")
+
+
+def test_recorded_schema_only_grows(spark, tmp_path):
+    """Reads use the schema the log records, so the record must keep a
+    drift column that only one bucket carries. A merge touching no old
+    file writes the batch's schema alone, and a compaction of another
+    bucket rewrites files without the column; read_state() must still
+    return the column and its values afterwards."""
+    t = _mk(spark, tmp_path)
+    t.init_from_events(_seed(spark, n=1))  # id 0: a single live bucket
+    t.merge_cdc_batch(_drift(spark, [(0, "s0b", "u", "0002", None, "hello")]))
+    kb = _buckets_of(spark, range(40), 8)
+    fresh = next(k for k in range(40) if kb[k] != kb[0])
+    _, touched = t.merge_cdc_batch(_events(spark, [(fresh, "new", "c", "0003", None)]))
+    assert touched == [kb[fresh]]
+    assert _recorded(t) == ({"id", "status", "_op", "_lsn", "_deleted", "note"}, True)
+
+    v, done = t.compact_buckets(buckets=[kb[fresh]], min_files=1)
+    assert done == [kb[fresh]] and "note" in _recorded(t, v)[0]
+    got = {r["id"]: r["note"] for r in t.read_state().collect()}
+    assert got == {0: "hello", fresh: None}
+
+
+def test_log_without_complete_mark_keeps_drift_column(spark, tmp_path):
+    """Logs written before the ``schema_complete`` mark may record a
+    schema without a drift column that lives in another bucket (bucket
+    compaction recorded only what it rewrote). Reads of such a log keep
+    merging footers, and the first merge seals the record with a footer
+    merge, so rewriting the drift bucket keeps the column's values."""
+    import json
+
+    t = _mk(spark, tmp_path)
+    t.init_from_events(_seed(spark))
+    _, (drift_bucket,) = t.merge_cdc_batch(
+        _drift(spark, [(3, "s3b", "u", "0002", None, "hello")])
+    )
+    _, bmap, _ = resolve_snapshot_state(t)
+    other = min(b for b in bmap.values() if b != drift_bucket)
+    v, _ = t.compact_buckets(buckets=[other], min_files=1)
+    # rewrite the log into the old shape: no mark anywhere, and the
+    # compaction records the schema of the bucket it rewrote
+    for ver in range(v + 1):
+        p = t._entry_path(ver)
+        with open(p) as f:
+            e = json.load(f)
+        e.pop("schema_complete", None)
+        if ver == v:
+            e["schema"]["fields"] = [
+                f for f in e["schema"]["fields"] if f["name"] != "note"
+            ]
+        with open(p, "w") as f:
+            json.dump(e, f)
+
+    old = BucketedTxLogTable(spark, str(tmp_path / "t"))
+    assert _recorded(old) == ({"id", "status", "_op", "_lsn", "_deleted"}, None)
+
+    def notes():
+        return {r["id"]: r["note"] for r in old.read_state().collect()}
+
+    want = {i: ("hello" if i == 3 else None) for i in range(60)}
+    assert notes() == want
+    kb = _buckets_of(spark, range(60), 8)
+    mate = next(k for k in range(60) if k != 3 and kb[k] == drift_bucket)
+    old.merge_cdc_batch(_events(spark, [(mate, "mate", "u", "0003", None)]))
+    assert "note" in _recorded(old)[0] and _recorded(old)[1]
+    assert notes() == want
+    old.compact_buckets(buckets=[drift_bucket], min_files=1)
+    assert notes() == want
